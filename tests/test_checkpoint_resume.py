@@ -2,37 +2,55 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import seeded_random_graph
 from webgraph_ans_rs_spark.checkpoint import CheckpointManager
 from webgraph_ans_rs_spark.operators.components import connected_components
+from webgraph_ans_rs_spark.operators.labelprop import label_propagation
 from webgraph_ans_rs_spark.operators.pagerank import pagerank
 
 
-def test_pagerank_resume_identical(spark):
-    """FIXTURES.md §6: kill after iteration k, restart, final ranks must be
+def _run(kernel, edges, verts, n_iter, cm=None):
+    """(final vertex values, first superstep the call ran)."""
+    if kernel == "pagerank":
+        res = pagerank(edges, verts, max_iter=n_iter, tol=None, checkpoint_manager=cm)
+        return {r.vertex: r.pr for r in res.ranks.collect()}, res.history[0]["iteration"]
+    labels = label_propagation(edges, verts, num_iter=n_iter, checkpoint_manager=cm)
+    return {r.vertex: r.label for r in labels.collect()}, None
+
+
+@pytest.mark.parametrize(
+    "kernel, job_id, n_iter, crash_at",
+    [("pagerank", "pagerank", 5, 3), ("label_propagation", "lp", 3, 1)],
+    ids=["pagerank", "label_propagation"],
+)
+def test_resume_identical(spark, kernel, job_id, n_iter, crash_at):
+    """FIXTURES.md §6: kill after iteration k, restart, final state must be
     identical to an uninterrupted run."""
     edges, verts, es, n = seeded_random_graph(spark, n=120, m=500)
-    uninterrupted = pagerank(edges, verts, max_iter=5, tol=None)
-    want = {r.vertex: r.pr for r in uninterrupted.ranks.collect()}
+    want, _ = _run(kernel, edges, verts, n_iter)
 
     with tempfile.TemporaryDirectory() as root:
         cm = CheckpointManager(spark, root)
-        # "crash" after 3 supersteps
-        pagerank(edges, verts, max_iter=3, tol=None, checkpoint_manager=cm)
-        assert cm.committed_iterations("pagerank") == [1, 2, 3]
-        # restart: must resume at 3 and run only 4, 5
-        res = pagerank(edges, verts, max_iter=5, tol=None, checkpoint_manager=cm)
-        assert res.history[0]["iteration"] == 4
-        got = {r.vertex: r.pr for r in res.ranks.collect()}
+        # "crash" after crash_at supersteps
+        _run(kernel, edges, verts, crash_at, cm)
+        assert cm.committed_iterations(job_id) == list(range(1, crash_at + 1))
+        # restart: must resume at crash_at and run only the rest
+        got, first = _run(kernel, edges, verts, n_iter, cm)
+        if first is not None:
+            assert first == crash_at + 1
+        assert got.keys() == want.keys()
         # identical up to float summation order inside groupBy partials
         assert max(abs(got[v] - want[v]) for v in want) < 1e-15
 
-        lin = cm.lineage("pagerank")
+        # one lineage row set per superstep: a resumed run that re-ran the
+        # committed supersteps would double their row counts
+        lin = cm.lineage(job_id)
         assert lin is not None
         rows = lin.groupBy("iteration").agg(F.sum("rows").alias("n")).collect()
-        assert {r.iteration: r.n for r in rows} == {i: 120 for i in range(1, 6)}
+        assert {r.iteration: r.n for r in rows} == {i: 120 for i in range(1, n_iter + 1)}
 
 
 def test_cc_with_checkpoints(spark):

@@ -69,7 +69,7 @@ def test_pagerank_history_metrics(spark):
     edges, verts, es, n = seeded_random_graph(spark)
     res = pagerank(edges, verts, max_iter=3, tol=None)
     assert len(res.history) == 3
-    assert all(h["wall_ms"] >= 0 and h["l1_delta"] >= 0 for h in res.history)
+    assert all(h["wall_ms"] >= 0 and h["delta"] >= 0 for h in res.history)
 
 
 def test_personalized_pagerank_mass_and_locality(spark):

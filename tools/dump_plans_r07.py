@@ -6,8 +6,8 @@ optimized tree (suffix=after); the judge checks plan claims against the
 committed files in plans/r07/.
 
 Loop kernels are dumped as the frame a caller receives (their barriers
-show as Scan ExistingRDD) plus, where a probe exists, the per-superstep
-plan the audit asserts.
+show as Scan ExistingRDD) plus the per-superstep plan the audit asserts:
+PageRank's is superstep 2 of a production call (superstep.capture).
 """
 
 from __future__ import annotations
@@ -67,10 +67,7 @@ from webgraph_ans_rs_spark.operators.hits import (  # noqa: E402
     hits_halfstep_probe,
 )
 
-caches: list = []
-dump("hits_halfstep", hits_halfstep_probe(edges, verts, release_caches=caches))
-for c in caches:
-    c.unpersist(blocking=False)
+dump("hits_halfstep", hits_halfstep_probe(edges, verts))
 dump("hits_result", hits(edges, verts, num_iter=3))
 
 # --- hyperball superstep --------------------------------------------------
@@ -88,14 +85,14 @@ dump("hyperball_superstep", _superstep_plan(e_hb, regs, reg_cols))
 e_hb.unpersist()
 
 # --- pagerank superstep (audited single-exchange shape) -------------------
-from webgraph_ans_rs_spark.operators.pagerank import (  # noqa: E402
-    pagerank,
-    superstep_probe,
-)
+from webgraph_ans_rs_spark.operators import superstep  # noqa: E402
+from webgraph_ans_rs_spark.operators.pagerank import pagerank  # noqa: E402
 
 aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
 spark.conf.set("spark.sql.adaptive.enabled", "false")
-dump("pagerank_superstep", superstep_probe(edges, verts))
+with superstep.capture() as cap:
+    pagerank(edges, verts, max_iter=2, tol=0.0)
+dump("pagerank_superstep", cap.frame)
 spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 dump("pagerank_result", pagerank(edges, verts, max_iter=5, tol=None).ranks)
 

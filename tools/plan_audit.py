@@ -129,10 +129,14 @@ def main() -> int:
 
     # 9. pagerank superstep plans exactly ONE exchange (the E-sized gather):
     # the scatter join must be exchange- and sort-free (co-partitioned csr +
-    # preserved rank partitioning + shuffle_hash). AQE disabled so the
-    # static plan tree is walkable; cached build plans are not children of
-    # InMemoryTableScan, so the walk counts only per-superstep exchanges.
-    from webgraph_ans_rs_spark.operators.pagerank import superstep_probe
+    # preserved rank partitioning + shuffle_hash). The frame is superstep 2
+    # of a production pagerank call, handed out by the superstep driver
+    # (tol mode barriers superstep 1, so the frame holds one superstep).
+    # AQE disabled so the static plan tree is walkable; cached build plans
+    # are not children of InMemoryTableScan, so the walk counts only
+    # per-superstep exchanges.
+    from webgraph_ans_rs_spark.operators import superstep
+    from webgraph_ans_rs_spark.operators.pagerank import pagerank
 
     def count_nodes(jplan, name: str) -> int:
         total = 1 if name in jplan.nodeName() else 0
@@ -144,8 +148,9 @@ def main() -> int:
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        step2 = superstep_probe(edges, vertices(docs))
-        jplan = step2._jdf.queryExecution().executedPlan()
+        with superstep.capture() as cap:
+            pagerank(edges, vertices(docs), max_iter=2, tol=0.0)
+        jplan = cap.frame._jdf.queryExecution().executedPlan()
         n_exchange = count_nodes(jplan, "Exchange")
         n_sort = count_nodes(jplan, "Sort")
         n_shj = count_nodes(jplan, "ShuffledHashJoin")
@@ -264,17 +269,15 @@ def main() -> int:
     # 17. personalized PageRank superstep: inherits the flagship loop's
     # single-exchange discipline — exactly ONE exchange (the gather), no
     # sorts, both the scatter and the teleport-apply joins shuffle-hash
-    # over co-partitioned sides
-    from webgraph_ans_rs_spark.operators.pagerank import ppr_superstep_probe
+    # over co-partitioned sides (superstep 2 of a production call)
+    from webgraph_ans_rs_spark.operators.pagerank import personalized_pagerank
 
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         ppr_seeds = vertices(docs).limit(5).select("vertex")
-        probe_caches: list = []
-        ppr2 = ppr_superstep_probe(
-            edges, vertices(docs), ppr_seeds, release_caches=probe_caches
-        )
-        jplan = ppr2._jdf.queryExecution().executedPlan()
+        with superstep.capture() as cap:
+            personalized_pagerank(edges, vertices(docs), ppr_seeds, num_iter=2)
+        jplan = cap.frame._jdf.queryExecution().executedPlan()
         n_exchange = count_nodes(jplan, "Exchange")
         n_sort = count_nodes(jplan, "Sort")
         n_shj = count_nodes(jplan, "ShuffledHashJoin")
@@ -283,8 +286,6 @@ def main() -> int:
             n_exchange == 1 and n_sort == 0 and n_shj == 2,
             f"(exchanges={n_exchange} sorts={n_sort} shj={n_shj})",
         )
-        for c in probe_caches:  # plan inspected — release the probe caches
-            c.unpersist(blocking=False)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
@@ -337,8 +338,7 @@ def main() -> int:
 
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        hits_caches: list = []
-        hs = hits_halfstep_probe(edges, vertices(docs), release_caches=hits_caches)
+        hs = hits_halfstep_probe(edges, vertices(docs))
         hs_jplan = hs._jdf.queryExecution().executedPlan()
         hs_exchange = count_nodes(hs_jplan, "Exchange")
         hs_sort = count_nodes(hs_jplan, "Sort")
@@ -348,8 +348,6 @@ def main() -> int:
             hs_exchange == 1 and hs_sort == 0 and hs_shj == 1,
             f"(exchanges={hs_exchange} sorts={hs_sort} shj={hs_shj})",
         )
-        for c in hits_caches:
-            c.unpersist(blocking=False)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 

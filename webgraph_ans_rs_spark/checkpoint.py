@@ -5,11 +5,14 @@ The DataFrame analogue of the reference's per-node resume points: an
 encoding (/root/reference/src/ans/mod.rs:62-68,
 src/bvgraph/writers/bvgraph_encoder.rs:167-171) and serialized as
 ``.states`` / ``.pointers`` (random_access.rs:198-221) so decoding can jump
-into the middle of the stream. Here, each iterative job (PageRank / CC / LP)
-commits its full vertex-state snapshot per superstep plus a lineage row per
-*partition* (row counts) and per-iteration metrics; a restarted job reads
-the max committed iteration and continues — producing bit-identical final
-output (asserted by tests/test_checkpoint_resume.py).
+into the middle of the stream. Here, each iterative job commits its full
+vertex-state snapshot per superstep plus a lineage row per *partition* (row
+counts) and per-iteration metrics; a restarted job reads the max committed
+iteration and continues — producing bit-identical final output (asserted by
+tests/test_checkpoint_resume.py). PageRank and label propagation resume and
+commit through the superstep driver (operators/superstep.py ``Loop.start``
+and ``Loop.run``); connected components still calls this class from its own
+loop.
 
 Layout (parquet; an Iceberg catalog would make these table snapshots, the
 protocol is identical):

@@ -38,18 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.derived_graph import undirected_symmetrize
-
-
-def _edge_signature(df: DataFrame) -> tuple[int, object]:
-    """Order-insensitive (count, hash-sum) signature of an edge set.
-    decimal(38,0) sum: overflow-free under ANSI mode for any edge count."""
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
-        ).alias("sig"),
-    ).first()
-    return row.n, row.sig
+from .superstep import _edge_signature
 
 
 def _star_labels(edges_star: DataFrame, verts: DataFrame) -> DataFrame:

@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .superstep import Loop, plan
+
 
 def _csr(edges: DataFrame, p: int, max_segment: int | None) -> DataFrame:
     from .pagerank import _pin_src_partitions
@@ -61,7 +63,20 @@ def _csr(edges: DataFrame, p: int, max_segment: int | None) -> DataFrame:
     return _pin_src_partitions(
         base.select("src", "dsts"), p, edges.sparkSession,
         force=max_segment is not None,
-    ).persist()
+    )
+
+
+def _invariants(loop: Loop, edges: DataFrame, verts: DataFrame, p: int,
+                max_segment: int | None) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Cached forward CSR, transposed CSR and zero rows (uncounted)."""
+    e = edges.select("src", "dst")
+    csr_fwd = loop.keep(_csr(e, p, max_segment))
+    csr_fwd.count()
+    csr_rev = loop.keep(
+        _csr(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), p, max_segment)
+    )
+    csr_rev.count()
+    return csr_fwd, csr_rev, loop.keep(verts.select("vertex", F.lit(0.0).alias("c")))
 
 
 def _gather(csr: DataFrame, score: DataFrame, zeros: DataFrame) -> DataFrame:
@@ -105,24 +120,12 @@ def hits(
         raise ValueError(f"hits: num_iter must be >= 1, got {num_iter}")
     spark = edges.sparkSession
     p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    coalesce_prev = spark.conf.get(coalesce_key, "true")
-    csr_fwd = csr_rev = zeros = None
-    try:
-        # AQE partition coalescing off inside the loop: the gather must
-        # emit HashPartitioning(vertex, P) for the next half-step's join
-        # to be exchange-free (the pagerank co-partitioning contract)
-        spark.conf.set(coalesce_key, "false")
-        e = edges.select("src", "dst")
-        csr_fwd = _csr(e, p, max_segment)
-        csr_fwd.count()
-        csr_rev = _csr(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            p,
-            max_segment,
-        )
-        csr_rev.count()
-        zeros = verts.select("vertex", F.lit(0.0).alias("c")).persist()
+    # the superstep driver's scope: AQE partition coalescing off inside the
+    # loop, so the gather emits HashPartitioning(vertex, P) and the next
+    # half-step's join is exchange-free (the pagerank co-partitioning
+    # contract); the cached invariants are released on exit
+    with Loop(spark) as loop:
+        csr_fwd, csr_rev, zeros = _invariants(loop, edges, verts, p, max_segment)
         n = zeros.count()
         score = (
             verts.select("vertex", F.lit(1.0).alias("sc"))
@@ -186,47 +189,28 @@ def hits(
             )
             .select("vertex", "auth", "hub")
         )
-    finally:
-        spark.conf.set(coalesce_key, coalesce_prev)
-        for c in (csr_fwd, csr_rev, zeros):
-            if c is not None:
-                c.unpersist(blocking=False)
 
 
 def hits_halfstep_probe(
     edges: DataFrame,
     verts: DataFrame,
     shuffle_partitions: int | None = None,
-    release_caches: list | None = None,
 ) -> DataFrame:
     """Un-executed second half-step frame on the production shapes (first
     half-step executed + checkpointed exactly as the loop does) — for
     tools/plan_audit.py check 20: a HITS half-step must plan exactly ONE
-    exchange, like the PageRank superstep. Pass ``release_caches=[]`` to
-    unpersist the probe's cached frames AFTER plan inspection (the
-    unpersist-before-explain trap, pagerank.ppr_superstep_probe)."""
+    exchange, like the PageRank superstep. Built and planned inside the
+    same coalescing scope as ``hits``, while the invariants are cached."""
     spark = edges.sparkSession
     p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select("src", "dst")
-    csr_fwd = _csr(e, p, None)
-    csr_fwd.count()
-    csr_rev = _csr(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), p, None
-    )
-    csr_rev.count()
-    zeros = verts.select("vertex", F.lit(0.0).alias("c")).persist()
-    zeros.count()
-    score = (
-        verts.select("vertex", F.lit(1.0).alias("sc"))
-        .repartition(p, "vertex")
-        .localCheckpoint(eager=True)
-    )
-    araw = _gather(csr_fwd, score, zeros).localCheckpoint(eager=True)
-    auth = araw.select("vertex", (F.col("raw") / F.lit(2.0)).alias("sc"))
-    probe = _gather(csr_rev, auth, zeros)
-    if release_caches is not None:
-        release_caches.extend([csr_fwd, csr_rev, zeros])
-    else:
-        for c in (csr_fwd, csr_rev, zeros):
-            c.unpersist(blocking=False)
-    return probe
+    with Loop(spark) as loop:
+        csr_fwd, csr_rev, zeros = _invariants(loop, edges, verts, p, None)
+        zeros.count()
+        score = (
+            verts.select("vertex", F.lit(1.0).alias("sc"))
+            .repartition(p, "vertex")
+            .localCheckpoint(eager=True)
+        )
+        araw = _gather(csr_fwd, score, zeros).localCheckpoint(eager=True)
+        auth = araw.select("vertex", (F.col("raw") / F.lit(2.0)).alias("sc"))
+        return plan(_gather(csr_rev, auth, zeros))

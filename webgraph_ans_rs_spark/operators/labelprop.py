@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.derived_graph import undirected_symmetrize
+from .superstep import Loop
 
 
 def _argmax_labels(hist: DataFrame) -> DataFrame:
@@ -61,30 +62,19 @@ def label_propagation(
     (default, hub-safe min_by aggregation) or "window" (row_number form,
     kept for the equality cross-check in tests)."""
     pick = _argmax_labels if argmax == "agg" else _argmax_labels_window
-    und = undirected_symmetrize(edges).persist()
-    und.count()
-
-    labels = verts.select("vertex", F.col("vertex").alias("label"))
-    start = 0
-    ckpt_params = None
-    if checkpoint_manager is not None:
+    with Loop(edges.sparkSession, copartition=False) as loop:
+        und = loop.keep(undirected_symmetrize(edges))
+        und.count()
         # resume fingerprint (same scheme as CC/PageRank): a snapshot from
         # a different edge set or argmax variant must be rejected
-        from .components import _edge_signature
-
-        en, esig = _edge_signature(und)
-        ckpt_params = {"edges_n": en, "edges_sig": str(esig), "argmax": argmax}
-        resumed = checkpoint_manager.latest_snapshot(job_id, params=ckpt_params)
-        if resumed is not None:
-            start, labels = resumed
-    labels = labels.localCheckpoint(eager=True)
-
-    for it in range(start + 1, num_iter + 1):
-        labels = _lp_step(und, labels, pick).localCheckpoint(eager=True)
-        if checkpoint_manager is not None:
-            checkpoint_manager.commit(job_id, it, labels, {}, params=ckpt_params)
-    und.unpersist()
-    return labels
+        loop.start(
+            verts.select("vertex", F.col("vertex").alias("label")),
+            checkpoint_manager=checkpoint_manager,
+            job_id=job_id,
+            params={"argmax": argmax},
+            edges=und,
+        )
+        return loop.run(lambda labels, it: _lp_step(und, labels, pick), num_iter).state
 
 
 def _lp_step(
@@ -141,29 +131,29 @@ def label_propagation_converged(
     per-superstep action discipline as pagerank's L1-delta loop.
     """
     pick = _argmax_labels if argmax == "agg" else _argmax_labels_window
-    und = undirected_symmetrize(edges).persist()
-    und.count()
-    labels = (
-        verts.select("vertex", F.col("vertex").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        for it in range(1, max_iter + 1):
-            nxt = _lp_step(und, labels, pick, self_vote=True).localCheckpoint(
-                eager=True
-            )
-            changed = (
-                nxt.join(labels.withColumnRenamed("label", "prev"), "vertex")
-                .where(F.col("label") != F.col("prev"))
-                .count()
-            )
-            if changed == 0:
-                return labels, it
-            labels = nxt
-        raise RuntimeError(
-            f"label_propagation_converged: labels did not stabilize within "
-            f"max_iter={max_iter} supersteps (synchronous LP can oscillate; "
-            f"raise the bound or break ties asynchronously)"
+    with Loop(edges.sparkSession, copartition=False) as loop:
+        und = loop.keep(undirected_symmetrize(edges))
+        und.count()
+        loop.start(verts.select("vertex", F.col("vertex").alias("label")))
+        res = loop.run(
+            lambda labels, it: _lp_step(und, labels, pick, self_vote=True),
+            max_iter,
+            delta=_changed,
+            tol=0,
         )
-    finally:
-        und.unpersist()
+        if not res.converged:
+            raise RuntimeError(
+                f"label_propagation_converged: labels did not stabilize within "
+                f"max_iter={max_iter} supersteps (synchronous LP can oscillate; "
+                f"raise the bound or break ties asynchronously)"
+            )
+        return res.state, res.iterations
+
+
+def _changed(new: DataFrame, old: DataFrame) -> int:
+    """Number of vertices whose label differs between two supersteps."""
+    return (
+        new.join(old.withColumnRenamed("label", "prev"), "vertex")
+        .where(F.col("label") != F.col("prev"))
+        .count()
+    )

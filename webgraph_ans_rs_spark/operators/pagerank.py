@@ -27,18 +27,22 @@ numbers likewise exclude compression time, README.md:106-150).
 Dangling vertices redistribute their mass uniformly; sum(rank) == 1 holds
 every iteration.
 
-Lineage is truncated each superstep with localCheckpoint (or parquet
-commits via CheckpointManager for resumable runs) — the analogue of the
-reference's per-node ANSCompressorPhase resume points
-(/root/reference/src/ans/mod.rs:62-68, bvgraph_encoder.rs:167-171).
+All three variants (``pagerank``, ``personalized_pagerank[_converged]``,
+``pagerank_weighted``) supply only their setup and step function to the
+superstep driver (operators/superstep.py), which owns the loop policy:
+the coalescing scope, the localCheckpoint barriers, the L1 convergence
+test, CheckpointManager resume/commit and the per-superstep history. They
+share one CSR and dangling-set builder (``_pin_csr``) and one
+scatter/gather (``_gather``).
 
 Scale notes (100 TB / 1e12 docs): exactly ONE shuffle per superstep — the
 E-sized gather on dst. The scatter join is exchange- and sort-free: csr and
 ranks share one partition count P, AQE partition coalescing is suspended
 inside the loop so the gather emits HashPartitioning(vertex, P) that
 localCheckpoint preserves into the next superstep, and a shuffle_hash hint
-builds the V-sized rank map instead of sorting both sides
-(tools/plan_audit.py check 9 asserts the single-exchange property).
+builds the V-sized rank map instead of sorting both sides.
+tools/plan_audit.py checks 9 and 17 assert the single-exchange property on
+the superstep-2 frame the production loop builds (``superstep.capture``).
 Rank state is O(V); edges are loop-invariant and cached once, amortized
 across supersteps.
 """
@@ -50,6 +54,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .superstep import Loop, LoopResult
+
+# lineage truncation cadence of the fixed-iteration loops: a barrier is a
+# materialization, so one per superstep doubles fixed costs; every 3rd
+# superstep bounds plan depth at 3 joins while amortizing the barrier
+_TRUNCATE_EVERY = 3
+
 
 @dataclass
 class PageRankResult:
@@ -67,8 +79,8 @@ def _pin_src_partitions(csr, p: int, spark, force: bool = False) -> DataFrame:
     when p equals the session shuffle-partition count (AQE coalescing is
     off inside the loops), and the explicit ``repartition(p, "src")`` the
     loops used to add re-exchanged the whole E-sized adjacency a second
-    time per call (round-7; probe-verified that the superstep still plans
-    exactly 1 exchange / 0 sorts without it, and row placement — hence
+    time per call (round-7; plan-audit-verified that the superstep still
+    plans exactly 1 exchange / 0 sorts without it, and row placement — hence
     every float partial-sum order — is identical because both paths are
     the same HashPartitioning). ``force`` covers builds whose grouping
     keys differ from plain src (the segmented CSR groups by (src, _seg),
@@ -78,119 +90,105 @@ def _pin_src_partitions(csr, p: int, spark, force: bool = False) -> DataFrame:
     return csr
 
 
-def _superstep_frame(csr, ranks, zeros, base: float, damping: float) -> DataFrame:
-    """One superstep: scatter (exchange-free shuffle-hash join + narrow
-    explode), gather (the ONE per-superstep shuffle), apply (projection)."""
-    scattered = csr.join(
-        ranks.hint("shuffle_hash"), csr["src"] == ranks["vertex"]
-    ).select(F.explode("dsts").alias("vertex"), (F.col("pr") * F.col("w")).alias("c"))
-    return (
-        scattered.unionAll(zeros)
-        .groupBy("vertex")
-        .agg(F.sum("c").alias("gathered"))
-        .select(
-            "vertex",
-            (F.lit(base) + F.lit(damping) * F.col("gathered")).alias("pr"),
-        )
-    )
+def _csr(edges: DataFrame, max_segment: int | None = None) -> DataFrame:
+    """(src, dsts, w = 1/outdeg); ``max_segment`` splits hub successor
+    lists across rows (graph_build.build_csr_segments)."""
+    if max_segment is not None:
+        from .graph_build import build_csr_segments
 
-
-def superstep_probe(
-    edges: DataFrame,
-    verts: DataFrame,
-    damping: float = 0.85,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Build the exact superstep-2 DataFrame (un-executed) on the production
-    code path, for physical-plan audits: superstep 1 is executed and
-    checkpointed exactly as the loop does, so the returned frame's rank
-    side is a LogicalRDD with the loop's preserved partitioning."""
-    spark = edges.sparkSession
-    n = verts.count()
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    csr = (
-        edges.groupBy("src")
-        .agg(F.collect_list("dst").alias("dsts"), F.count("*").alias("od"))
-        .select("src", "dsts", (F.lit(1.0) / F.col("od")).alias("w"))
-        .repartition(p, "src")
-        .persist()
-    )
-    csr.count()
-    zeros = verts.select("vertex", F.lit(0.0).alias("c")).persist()
-    zeros.count()
-    ranks = (
-        verts.select("vertex", F.lit(1.0 / n).alias("pr"))
-        .repartition(p, "vertex")
-        .localCheckpoint(eager=True)
-    )
-    base = (1.0 - damping) / n
-    ranks = _superstep_frame(csr, ranks, zeros, base, damping).localCheckpoint(eager=True)
-    return _superstep_frame(csr, ranks, zeros, base, damping)
-
-
-def ppr_superstep_probe(
-    edges: DataFrame,
-    verts: DataFrame,
-    seeds: DataFrame,
-    damping: float = 0.85,
-    shuffle_partitions: int | None = None,
-    release_caches: list | None = None,
-) -> DataFrame:
-    """Un-executed superstep-2 frame of the personalized loop, built on the
-    production shapes (superstep 1 executed + checkpointed exactly as the
-    loop does) — for tools/plan_audit.py check 17: the PPR superstep must
-    plan exactly ONE exchange (the gather), like the uniform loop.
-
-    Pass ``release_caches=[]`` to receive the cached frames the probe's
-    plan depends on and unpersist them AFTER inspecting the plan; without
-    it the probe unpersists them immediately (fine for executing, but the
-    inspected plan then re-expands the cached lineage)."""
-    spark = edges.sparkSession
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_seeds = seeds.count()
-    s_val = 1.0 / n_seeds
-    sv = (
-        verts.join(
-            seeds.select("vertex").withColumn("_is_seed", F.lit(True)), "vertex", "left"
-        )
-        .select(
-            "vertex",
-            F.when(F.col("_is_seed"), F.lit(s_val)).otherwise(F.lit(0.0)).alias("s"),
-        )
-        .repartition(p, "vertex")
-        .persist()
-    )
-    sv.count()
-    csr = (
-        edges.groupBy("src")
-        .agg(F.collect_list("dst").alias("dsts"), F.count("*").alias("od"))
-        .select("src", "dsts", (F.lit(1.0) / F.col("od")).alias("w"))
-        .repartition(p, "src")
-        .persist()
-    )
-    csr.count()
-    zeros = verts.select("vertex", F.lit(0.0).alias("c")).persist()
-    zeros.count()
-    pr = (
-        sv.select("vertex", F.col("s").alias("pr"))
-        .repartition(p, "vertex")
-        .localCheckpoint(eager=True)
-    )
-    coef = 1.0 - damping
-    pr = _ppr_superstep_frame(csr, pr, zeros, sv, coef, damping).localCheckpoint(
-        eager=True
-    )
-    probe = _ppr_superstep_frame(csr, pr, zeros, sv, coef, damping)
-    if release_caches is not None:
-        # cache substitution happens at PLANNING time, so the frames must
-        # stay persisted until the caller has inspected the probe's plan;
-        # the caller then unpersists these (otherwise they leak for the
-        # session — measured by the round-4 advice pass)
-        release_caches.extend([sv, csr, zeros])
+        base = build_csr_segments(edges, max_segment)
     else:
-        for c in (sv, csr, zeros):
-            c.unpersist(blocking=False)
-    return probe
+        base = edges.groupBy("src").agg(
+            F.collect_list("dst").alias("dsts"), F.count("*").alias("outdeg")
+        )
+    return base.select("src", "dsts", (F.lit(1.0) / F.col("outdeg")).alias("w"))
+
+
+def _pin_csr(loop: Loop, csr: DataFrame, verts: DataFrame, n: int, p: int,
+             segmented: bool = False) -> tuple[DataFrame, DataFrame | None]:
+    """Persist the CSR pinned to HashPartitioning(src, p), and the dangling
+    vertex set — None when there is none. A vertex with outdeg > 0 has
+    exactly one (unsegmented) CSR row, so #sources == n proves there are no
+    dangling vertices without the V⋈V anti-join, which is built only when
+    the counts differ."""
+    csr = loop.keep(_pin_src_partitions(csr, p, loop.spark, force=segmented))
+    n_sources = csr.count()
+    if segmented:
+        n_sources = csr.select("src").distinct().count()
+    if n_sources >= n:
+        return csr, None
+    dangling = loop.keep(
+        verts.join(csr.select(F.col("src").alias("vertex")), "vertex", "left_anti")
+    )
+    dangling.count()
+    return csr, dangling
+
+
+def _dangling_mass(ranks: DataFrame, dangling: DataFrame | None) -> float:
+    if dangling is None:
+        return 0.0
+    return (
+        ranks.join(dangling, "vertex", "left_semi")
+        .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
+        .first()[0]
+    )
+
+
+def _gather(csr: DataFrame, ranks: DataFrame, zeros: DataFrame) -> DataFrame:
+    """(vertex, g): scatter (exchange-free shuffle-hash join on the
+    co-partitioned CSR + narrow explode), then gather — the ONE
+    per-superstep shuffle, a groupBy(vertex).sum over the explode output ∪
+    the zero rows. A weighted CSR carries per-arc shares ``prs``."""
+    joined = csr.join(ranks.hint("shuffle_hash"), csr["src"] == ranks["vertex"])
+    if "prs" in csr.columns:
+        scattered = joined.select(F.explode("prs").alias("e"), "pr").select(
+            F.col("e.dst").alias("vertex"), (F.col("pr") * F.col("e.wn")).alias("c")
+        )
+    else:
+        scattered = joined.select(
+            F.explode("dsts").alias("vertex"), (F.col("pr") * F.col("w")).alias("c")
+        )
+    return scattered.unionAll(zeros).groupBy("vertex").agg(F.sum("c").alias("g"))
+
+
+def _l1(new: DataFrame, old: DataFrame) -> float:
+    return (
+        new.join(old.withColumnRenamed("pr", "pr_old"), "vertex")
+        .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))))
+        .first()[0]
+    )
+
+
+def _uniform_loop(loop: Loop, csr: DataFrame, verts: DataFrame, n: int, p: int,
+                  damping: float, max_iter: int, tol: float | None,
+                  segmented: bool = False, **resume) -> LoopResult:
+    """Power iteration with uniform teleport and uniform dangling
+    redistribution over an unweighted or weighted CSR; ``resume`` holds the
+    checkpoint arguments of ``Loop.start``."""
+    csr, dangling = _pin_csr(loop, csr, verts, n, p, segmented)
+    ranks0 = loop.start(
+        verts.select("vertex", F.lit(1.0 / n).alias("pr")),
+        partition=lambda df: df.repartition(p, "vertex"),
+        **resume,
+    )
+    # zero-contribution row per vertex: folds the "apply" outer join into
+    # the gather shuffle (IEEE x+0.0 == x keeps values unchanged); a narrow
+    # projection of the barriered initial state, not a V-sized persist
+    zeros = ranks0.select("vertex", F.lit(0.0).alias("c"))
+
+    def step(ranks: DataFrame, it: int) -> DataFrame:
+        base = (1.0 - damping) / n + damping * _dangling_mass(ranks, dangling) / n
+        return _gather(csr, ranks, zeros).select(
+            "vertex", (F.lit(base) + F.lit(damping) * F.col("g")).alias("pr")
+        )
+
+    return loop.run(
+        step,
+        max_iter,
+        delta=_l1 if tol is not None else None,
+        tol=tol,
+        truncate_every=_TRUNCATE_EVERY,
+    )
 
 
 def pagerank(
@@ -201,7 +199,6 @@ def pagerank(
     tol: float | None = 1e-6,
     checkpoint_manager=None,
     job_id: str = "pagerank",
-    truncate_every: int = 3,
     shuffle_partitions: int | None = None,
     max_segment: int | None = None,
     dense_relabel: bool = False,
@@ -209,11 +206,9 @@ def pagerank(
     """Exact power iteration. ``tol`` is the L1-delta convergence threshold;
     pass ``tol=None`` to run exactly ``max_iter`` supersteps (the
     oracle-comparable fixed-iteration mode, skipping delta computation).
-
-    ``truncate_every`` controls lineage truncation cadence: localCheckpoint
-    is a materialization barrier, so doing it every superstep doubles
-    fixed costs; every k-th superstep bounds plan depth at k joins while
-    amortizing the barrier.
+    With ``tol`` set, the last L1 delta is returned even if it never fell
+    to ``tol``. ``checkpoint_manager`` commits every superstep and resumes
+    from the latest snapshot of the same damping, vertex count and edge set.
 
     ``shuffle_partitions`` (e.g. LayoutPlan.shuffle_partitions from the
     stats pass) sets the single partition count P used for BOTH the cached
@@ -244,31 +239,12 @@ def pagerank(
     spark = edges.sparkSession
     n = verts.count()
     p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # Co-partitioning contract: csr is hash-partitioned on src with exactly
-    # P partitions and cached; ranks are hash-partitioned on vertex with the
-    # same P (the gather's groupBy(vertex) emits HashPartitioning(vertex, P)
-    # once AQE partition coalescing is off, and localCheckpoint preserves
-    # it). Both sides of the scatter join then satisfy the join's required
-    # distribution, and the shuffle_hash hint (build = V-sized ranks)
-    # removes the SortMergeJoin sorts — so a superstep plans exactly ONE
-    # exchange: the E-sized gather (verified: tools/plan_audit.py check 9).
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    coalesce_prev = spark.conf.get(coalesce_key, "true")
-
-    ids = None
-    csr = None
-    dangling_verts = None
-    # try/finally: a failure ANYWHERE after the conf snapshot — including
-    # the dense-relabel materialization and the CSR build — must not leave
-    # AQE partition coalescing disabled for the whole session, nor leak
-    # the cached loop invariants
-    try:
-        spark.conf.set(coalesce_key, "false")
+    with Loop(spark) as loop:
+        ids = None
         if dense_relabel:
             from .graph_build import dense_ids
 
-            ids = dense_ids(verts, num_partitions=p).persist()
+            ids = loop.keep(dense_ids(verts, num_partitions=p))
             ids.count()
             edges = (
                 edges.join(
@@ -282,146 +258,32 @@ def pagerank(
                 .select(F.col("s").alias("src"), F.col("d").alias("dst"))
             )
             verts = ids.select(F.col("dense_id").alias("vertex"))
-
-        if max_segment is not None:
-            from .graph_build import build_csr_segments
-
-            csr_base = build_csr_segments(edges, max_segment).withColumnRenamed(
-                "outdeg", "od"
-            )
-        else:
-            csr_base = edges.groupBy("src").agg(
-                F.collect_list("dst").alias("dsts"), F.count("*").alias("od")
-            )
-        csr = _pin_src_partitions(
-            csr_base.select("src", "dsts", (F.lit(1.0) / F.col("od")).alias("w")),
-            p,
-            spark,
-            force=max_segment is not None,
-        ).persist()
-        n_sources = csr.count()
-        if max_segment is not None:
-            # segmented CSR has >1 row per hub source; count distinct srcs
-            n_sources = csr.select("src").distinct().count()
-        # Loop-invariant: dangling vertex set (often empty for web graphs)
-        # — a vertex with outdeg > 0 has exactly one CSR row, so
-        # #CSR rows == n proves there are none WITHOUT the V⋈V anti-join
-        # the detection used to pay (the count is already materialized by
-        # the cache priming above); the anti-join is built only when the
-        # counts differ.
-        has_dangling = n_sources < n
-        dangling_verts = None
-        if has_dangling:
-            dangling_verts = verts.join(
-                csr.select(F.col("src").alias("vertex")), "vertex", "left_anti"
-            ).persist()
-            dangling_verts.count()
-
-        start_iter = 0
-        ranks = verts.select("vertex", F.lit(1.0 / n).alias("pr"))
-        # resume fingerprint: a snapshot from a run with different damping,
-        # a different vertex universe, or a DIFFERENT EDGE SET must be
-        # rejected, not silently continued (the reference's phases are
-        # per-compression-run artifacts, ans/mod.rs:62-68); edge signature
-        # = order-insensitive (count, hash-sum), same scheme as
-        # connected_components
-        ckpt_params = {"damping": damping, "n": n}
-        if checkpoint_manager is not None:
-            from .components import _edge_signature
-
-            en, esig = _edge_signature(edges)
-            ckpt_params.update({"edges_n": en, "edges_sig": str(esig)})
-            resumed = checkpoint_manager.latest_snapshot(job_id, params=ckpt_params)
-            if resumed is not None:
-                start_iter, ranks = resumed
-        ranks = ranks.repartition(p, "vertex").localCheckpoint(eager=True)
-        # zero-contribution seed row per vertex: folds the "apply" outer
-        # join into the gather shuffle (IEEE x+0.0 == x keeps values
-        # unchanged). Derived as a narrow projection of the CHECKPOINTED
-        # initial rank state — same vertex set, but no separate V-sized
-        # persist + count job (round-7: one fewer setup job per call).
-        zeros = ranks.select("vertex", F.lit(0.0).alias("c"))
-        setup_sec = time.time() - t_setup
-        t_loop = time.time()
-
-        history: list[dict] = []
-        l1 = float("inf")
-        it = start_iter
-        for it in range(start_iter + 1, max_iter + 1):
-            t0 = time.time()
-            dangling = (
-                ranks.join(dangling_verts, "vertex", "left_semi")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .first()[0]
-                if has_dangling
-                else 0.0
-            )
-            base = (1.0 - damping) / n + damping * dangling / n
-            new_ranks = _superstep_frame(csr, ranks, zeros, base, damping)
-            last = it == max_iter
-            # intermediate truncation bounds plan depth for long runs; on
-            # the final superstep the caller's action materializes anyway,
-            # so a mid-loop barrier right before it is pure overhead
-            if last or (it % truncate_every == 0 and max_iter - it > 1) or tol is not None or checkpoint_manager:
-                new_ranks = new_ranks.localCheckpoint(eager=True)
-            if tol is not None:
-                l1 = (
-                    new_ranks.join(ranks.withColumnRenamed("pr", "pr_old"), "vertex")
-                    .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))))
-                    .first()[0]
-                )
-            ranks = new_ranks
-            wall_ms = int((time.time() - t0) * 1000)
-            history.append({"iteration": it, "l1_delta": l1, "wall_ms": wall_ms})
-            if checkpoint_manager is not None:
-                checkpoint_manager.commit(
-                    job_id, it, ranks, {"l1_delta": l1, "wall_ms": wall_ms}, params=ckpt_params
-                )
-            if tol is not None and l1 <= tol:
-                break
-        loop_sec = time.time() - t_loop
+        res = _uniform_loop(
+            loop, _csr(edges, max_segment), verts, n, p, damping, max_iter, tol,
+            segmented=max_segment is not None,
+            checkpoint_manager=checkpoint_manager,
+            job_id=job_id,
+            params={"damping": damping, "n": n},
+            edges=edges,
+        )
+        setup_sec = time.time() - t_setup - res.loop_sec
+        ranks = res.state
         if ids is not None:
-            # map dense ids back to the caller's vertex ids; materialize
-            # before the id map's cache is released below
-            ranks = ranks.join(
-                ids.select(F.col("vertex").alias("orig"), F.col("dense_id").alias("vertex")),
-                "vertex",
-            ).select(F.col("orig").alias("vertex"), "pr").localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(coalesce_key, coalesce_prev)
-        if csr is not None:
-            csr.unpersist()
-        if dangling_verts is not None:
-            dangling_verts.unpersist()
-        if ids is not None:
-            ids.unpersist()
+            # map dense ids back to the caller's vertex ids; materialized
+            # before the id map's cache is released
+            ranks = loop.barrier(
+                ranks.join(
+                    ids.select(F.col("vertex").alias("orig"), F.col("dense_id").alias("vertex")),
+                    "vertex",
+                ).select(F.col("orig").alias("vertex"), "pr")
+            )
     return PageRankResult(
         ranks=ranks,
-        iterations=it,
-        l1_delta=l1,
-        history=history,
+        iterations=res.iterations,
+        l1_delta=res.delta,
+        history=res.history,
         setup_sec=setup_sec,
-        loop_sec=loop_sec,
-    )
-
-
-def _ppr_superstep_frame(csr, pr, zeros, sv, coef: float, damping: float) -> DataFrame:
-    """One PPR superstep on the SAME single-exchange discipline as the
-    flagship loop: scatter (exchange-free shuffle-hash join on the
-    co-partitioned CSR + narrow explode), gather (the ONE per-superstep
-    shuffle: groupBy(vertex).sum over the explode output ∪ zero rows),
-    apply (exchange-free shuffle-hash join of the gather output against
-    the co-partitioned teleport vector — both sides HashPartitioning
-    (vertex, P), so no exchange and no sort)."""
-    scattered = csr.join(
-        pr.hint("shuffle_hash"), csr["src"] == pr["vertex"]
-    ).select(F.explode("dsts").alias("vertex"), (F.col("pr") * F.col("w")).alias("c"))
-    gathered = (
-        scattered.unionAll(zeros).groupBy("vertex").agg(F.sum("c").alias("g"))
-    )
-    return gathered.join(sv.hint("shuffle_hash"), "vertex").select(
-        "vertex",
-        (F.lit(coef) * F.col("s") + F.lit(damping) * F.col("g")).alias("pr"),
+        loop_sec=res.loop_sec,
     )
 
 
@@ -501,14 +363,8 @@ def _ppr_loop(
     if n_seeds == 0:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     s_val = 1.0 / n_seeds
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    coalesce_prev = spark.conf.get(coalesce_key, "true")
-    sv = None
-    csr = None
-    dangling_verts = None
-    try:
-        spark.conf.set(coalesce_key, "false")
-        sv = (
+    with Loop(spark) as loop:
+        sv = loop.keep(
             verts.join(
                 seeds.select("vertex").withColumn("_is_seed", F.lit(True)),
                 "vertex",
@@ -519,61 +375,27 @@ def _ppr_loop(
                 F.when(F.col("_is_seed"), F.lit(s_val)).otherwise(F.lit(0.0)).alias("s"),
             )
             .repartition(p, "vertex")
-            .persist()
         )
         n_verts = sv.count()
-        csr = _pin_src_partitions(
-            edges.groupBy("src")
-            .agg(F.collect_list("dst").alias("dsts"), F.count("*").alias("od"))
-            .select("src", "dsts", (F.lit(1.0) / F.col("od")).alias("w")),
-            p,
-            spark,
-        ).persist()
-        n_sources = csr.count()
-        # zero seed rows ride the cached teleport vector — a narrow
-        # projection, not a third V-sized persist+count
+        csr, dangling = _pin_csr(loop, _csr(edges), verts, n_verts, p)
+        # zero rows ride the cached teleport vector — a narrow projection,
+        # not a third V-sized persist+count
         zeros = sv.select("vertex", F.lit(0.0).alias("c"))
-        # one CSR row per out-degreed vertex: equal counts prove there is
-        # no dangling mass without the V⋈V anti-join (pagerank discipline)
-        has_dangling = n_sources < n_verts
-        dangling_verts = None
-        if has_dangling:
-            dangling_verts = verts.join(
-                csr.select(F.col("src").alias("vertex")), "vertex", "left_anti"
-            ).persist()
-            dangling_verts.count()
-        # sv is already hash-partitioned (vertex, p) and cached; the
-        # narrow projection preserves that, so no explicit repartition
-        pr = sv.select("vertex", F.col("s").alias("pr")).localCheckpoint(
-            eager=True
-        )
-        it = 0
-        converged = tol is None
-        for it in range(1, max_iter + 1):
-            dm = (
-                pr.join(dangling_verts, "vertex", "left_semi")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .first()[0]
-                if has_dangling
-                else 0.0
+        # sv is already hash-partitioned (vertex, p) and cached; the narrow
+        # projection preserves that, so no explicit repartition
+        loop.start(sv.select("vertex", F.col("s").alias("pr")))
+
+        def step(pr: DataFrame, it: int) -> DataFrame:
+            # teleport apply: a second exchange-free shuffle-hash join, the
+            # gather output and sv both HashPartitioning(vertex, P)
+            coef = (1.0 - damping) + damping * _dangling_mass(pr, dangling)
+            return _gather(csr, pr, zeros).join(sv.hint("shuffle_hash"), "vertex").select(
+                "vertex",
+                (F.lit(coef) * F.col("s") + F.lit(damping) * F.col("g")).alias("pr"),
             )
-            coef = (1.0 - damping) + damping * dm
-            new_pr = _ppr_superstep_frame(
-                csr, pr, zeros, sv, coef, damping
-            ).localCheckpoint(eager=True)
-            if tol is not None:
-                l1 = (
-                    new_pr.join(pr.withColumnRenamed("pr", "pr_old"), "vertex")
-                    .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))))
-                    .first()[0]
-                )
-                pr = new_pr
-                if l1 <= tol:
-                    converged = True
-                    break
-            else:
-                pr = new_pr
-        if not converged:
+
+        res = loop.run(step, max_iter, delta=_l1 if tol is not None else None, tol=tol)
+        if tol is not None and not res.converged:
             # loudly distinguish "converged exactly at max_iter" from
             # "exhausted max_iter with l1 > tol" — library callers would
             # otherwise get silently-unconverged ranks (the DuckDB oracle
@@ -583,12 +405,7 @@ def _ppr_loop(
                 f"personalized_pagerank_converged: L1 delta still > {tol} "
                 f"after max_iter={max_iter}; raise max_iter or tol"
             )
-        return pr, it
-    finally:
-        spark.conf.set(coalesce_key, coalesce_prev)
-        for c in (sv, csr, dangling_verts):
-            if c is not None:
-                c.unpersist()
+        return res.state, res.iterations
 
 
 def pagerank_weighted(
@@ -597,7 +414,6 @@ def pagerank_weighted(
     damping: float = 0.85,
     num_iter: int = 5,
     shuffle_partitions: int | None = None,
-    truncate_every: int = 3,
 ) -> PageRankResult:
     """Fixed-iteration PageRank over WEIGHTED arcs (src, dst, wt) — the
     web-graph variant where an arc's transition probability is its weight
@@ -605,13 +421,13 @@ def pagerank_weighted(
     frequency). Weights must be strictly positive (a zero-total source
     would need the dangling treatment; the builders guarantee wt >= 1).
 
-    Same superstep discipline as ``pagerank`` (module docstring): the CSR
-    row carries pre-normalized per-successor weights wn = wt/tw computed
-    ONCE at build (an array transform, no per-superstep division), the
-    scatter join is exchange- and sort-free on co-partitioned state, and
-    the gather is the single per-superstep shuffle with map-side partial
-    sums. Dangling = vertices with no out-arc, mass redistributed
-    uniformly; sum(rank) == 1 every iteration.
+    Same superstep loop as ``pagerank`` (module docstring): the CSR row
+    carries pre-normalized per-successor weights wn = wt/tw computed ONCE
+    at build (an array transform, no per-superstep division), the scatter
+    join is exchange- and sort-free on co-partitioned state, and the gather
+    is the single per-superstep shuffle with map-side partial sums.
+    Dangling = vertices with no out-arc, mass redistributed uniformly;
+    sum(rank) == 1 every iteration.
 
     Scale note: the weighted CSR is unsegmented — a hub SOURCE's whole
     (dst, wn) array sits in one row, the same trade as the base
@@ -624,94 +440,30 @@ def pagerank_weighted(
     spark = edges_w.sparkSession
     n = verts.count()
     p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    coalesce_prev = spark.conf.get(coalesce_key, "true")
-    csr = None
-    dangling_verts = None
-    try:
-        spark.conf.set(coalesce_key, "false")
-        csr = (
-            edges_w.groupBy("src")
-            .agg(
-                F.collect_list(F.struct(F.col("dst"), F.col("wt"))).alias("prs"),
-                F.sum("wt").alias("tw"),
-            )
-            .select(
-                "src",
-                F.transform(
-                    "prs",
-                    lambda s: F.struct(
-                        s["dst"].alias("dst"), (s["wt"] / F.col("tw")).alias("wn")
-                    ),
-                ).alias("prs"),
-            )
+    csr = (
+        edges_w.groupBy("src")
+        .agg(
+            F.collect_list(F.struct(F.col("dst"), F.col("wt"))).alias("prs"),
+            F.sum("wt").alias("tw"),
         )
-        csr = _pin_src_partitions(csr, p, spark).persist()
-        n_sources = csr.count()
-        # equal counts prove no dangling mass — see pagerank()
-        has_dangling = n_sources < n
-        dangling_verts = None
-        if has_dangling:
-            dangling_verts = verts.join(
-                csr.select(F.col("src").alias("vertex")), "vertex", "left_anti"
-            ).persist()
-            dangling_verts.count()
-
-        ranks = (
-            verts.select("vertex", F.lit(1.0 / n).alias("pr"))
-            .repartition(p, "vertex")
-            .localCheckpoint(eager=True)
+        .select(
+            "src",
+            F.transform(
+                "prs",
+                lambda s: F.struct(
+                    s["dst"].alias("dst"), (s["wt"] / F.col("tw")).alias("wn")
+                ),
+            ).alias("prs"),
         )
-        # zero seed rows as a narrow projection of the checkpointed rank
-        # state — no separate V-sized persist+count (see pagerank())
-        zeros = ranks.select("vertex", F.lit(0.0).alias("c"))
-        setup_sec = time.time() - t_setup
-        t_loop = time.time()
-        history: list[dict] = []
-        it = 0
-        for it in range(1, num_iter + 1):
-            t0 = time.time()
-            dangling = (
-                ranks.join(dangling_verts, "vertex", "left_semi")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .first()[0]
-                if has_dangling
-                else 0.0
-            )
-            base = (1.0 - damping) / n + damping * dangling / n
-            scattered = csr.join(
-                ranks.hint("shuffle_hash"), csr["src"] == ranks["vertex"]
-            ).select(
-                F.explode("prs").alias("e"), "pr"
-            ).select(
-                F.col("e.dst").alias("vertex"),
-                (F.col("pr") * F.col("e.wn")).alias("c"),
-            )
-            new_ranks = (
-                scattered.unionAll(zeros)
-                .groupBy("vertex")
-                .agg(F.sum("c").alias("gathered"))
-                .select(
-                    "vertex",
-                    (F.lit(base) + F.lit(damping) * F.col("gathered")).alias("pr"),
-                )
-            )
-            if it == num_iter or it % truncate_every == 0:
-                new_ranks = new_ranks.localCheckpoint(eager=True)
-            ranks = new_ranks
-            history.append(
-                {"iteration": it, "wall_ms": int((time.time() - t0) * 1000)}
-            )
-        return PageRankResult(
-            ranks=ranks,
-            iterations=it,
-            l1_delta=float("nan"),
-            history=history,
-            setup_sec=setup_sec,
-            loop_sec=time.time() - t_loop,
-        )
-    finally:
-        spark.conf.set(coalesce_key, coalesce_prev)
-        for c in (csr, dangling_verts):
-            if c is not None:
-                c.unpersist()
+    )
+    with Loop(spark) as loop:
+        res = _uniform_loop(loop, csr, verts, n, p, damping, num_iter, None)
+        setup_sec = time.time() - t_setup - res.loop_sec
+    return PageRankResult(
+        ranks=res.state,
+        iterations=res.iterations,
+        l1_delta=float("nan"),
+        history=res.history,
+        setup_sec=setup_sec,
+        loop_sec=res.loop_sec,
+    )
