@@ -9,6 +9,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from webgraph_ans_rs_spark.operators.hits import hits
 from webgraph_ans_rs_spark.operators.kcore import kcore
@@ -187,13 +188,18 @@ def test_hits_validates_num_iter(spark):
         hits(edges, verts, num_iter=0)
 
 
+def _dense8_edges():
+    n = 8
+    return [(i, j) for i in range(n) for j in range(n) if i != j and (i + j) % 3]
+
+
 def test_hits_long_loop_rescale_no_overflow(spark):
     """10 iterations (20 half-steps) on a dense-ish graph: unnormalized
-    growth would be ~(degree)^20; the per-truncate rescale must keep the
-    final scores finite, normalized, and equal to the per-step-normalized
-    numpy power iteration."""
+    growth would be ~(degree)^20; the final scores must stay finite,
+    normalized, and equal to the per-step-normalized numpy power
+    iteration."""
     n = 8
-    el = [(i, j) for i in range(n) for j in range(n) if i != j and (i + j) % 3]
+    el = _dense8_edges()
     edges = spark.createDataFrame(el, "src long, dst long")
     verts = spark.createDataFrame([(i,) for i in range(n)], "vertex long")
     got = {r.vertex: (r.auth, r.hub) for r in hits(edges, verts, num_iter=10).collect()}
@@ -202,6 +208,24 @@ def test_hits_long_loop_rescale_no_overflow(spark):
         assert math.isfinite(got[v][0]) and math.isfinite(got[v][1])
         assert got[v][0] == pytest.approx(want_a[v], abs=1e-9)
         assert got[v][1] == pytest.approx(want_h[v], abs=1e-9)
+
+
+def test_hits_rescale_branch_with_isolated_vertices(spark):
+    """The same graph padded with isolated vertices to n = 10,000, run for
+    31 iterations: (2·31 + 1)·log10(n) = 252 > 250 trips the overflow
+    guard, so every half-step input is divided by its max |score|. The
+    rescaled scores must equal numpy's, and isolated vertices score 0."""
+    n, n_pad, iters = 8, 10_000, 31
+    el = _dense8_edges()
+    edges = spark.createDataFrame(el, "src long, dst long")
+    verts = spark.range(n_pad).select(F.col("id").alias("vertex"))
+    got = {r.vertex: (r.auth, r.hub) for r in hits(edges, verts, num_iter=iters).collect()}
+    want_a, want_h = _hits_numpy(el, n, iters)
+    assert len(got) == n_pad
+    for v in range(n):
+        assert got[v][0] == pytest.approx(want_a[v], abs=1e-9)
+        assert got[v][1] == pytest.approx(want_h[v], abs=1e-9)
+    assert all(got[v] == (0.0, 0.0) for v in range(n, n_pad))
 
 
 def test_lp_converged_is_fixpoint_and_reports_iters(spark):

@@ -7,7 +7,8 @@ committed files in plans/r07/.
 
 Loop kernels are dumped as the frame a caller receives (their barriers
 show as Scan ExistingRDD) plus the per-superstep plan the audit asserts:
-PageRank's is superstep 2 of a production call (superstep.capture).
+for PageRank and HITS it is superstep 2 of a production call
+(superstep.capture).
 """
 
 from __future__ import annotations
@@ -61,13 +62,13 @@ from webgraph_ans_rs_spark.operators.kcore import kcore  # noqa: E402
 
 dump("kcore", kcore(edges, k=3))
 
-# --- hits (half-step probe = the audited superstep shape) -----------------
-from webgraph_ans_rs_spark.operators.hits import (  # noqa: E402
-    hits,
-    hits_halfstep_probe,
-)
+# --- hits (half-step 2 = the audited superstep shape) ---------------------
+from webgraph_ans_rs_spark.operators import superstep  # noqa: E402
+from webgraph_ans_rs_spark.operators.hits import hits  # noqa: E402
 
-dump("hits_halfstep", hits_halfstep_probe(edges, verts))
+with superstep.capture() as cap:
+    hits(edges, verts, num_iter=2)
+dump("hits_halfstep", cap.frame)
 dump("hits_result", hits(edges, verts, num_iter=3))
 
 # --- hyperball superstep --------------------------------------------------
@@ -85,7 +86,6 @@ dump("hyperball_superstep", _superstep_plan(e_hb, regs, reg_cols))
 e_hb.unpersist()
 
 # --- pagerank superstep (audited single-exchange shape) -------------------
-from webgraph_ans_rs_spark.operators import superstep  # noqa: E402
 from webgraph_ans_rs_spark.operators.pagerank import pagerank  # noqa: E402
 
 aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")

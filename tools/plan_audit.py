@@ -131,7 +131,8 @@ def main() -> int:
     # the scatter join must be exchange- and sort-free (co-partitioned csr +
     # preserved rank partitioning + shuffle_hash). The frame is superstep 2
     # of a production pagerank call, handed out by the superstep driver
-    # (tol mode barriers superstep 1, so the frame holds one superstep).
+    # (the driver barriers every superstep under capture, so the frame
+    # holds one superstep).
     # AQE disabled so the static plan tree is walkable; cached build plans
     # are not children of InMemoryTableScan, so the walk counts only
     # per-superstep exchanges.
@@ -333,13 +334,15 @@ def main() -> int:
 
     # 20. HITS half-step: inherits the flagship loop's single-exchange
     # discipline — exactly ONE exchange (the gather), 0 sorts, the
-    # scatter join shuffle-hash over co-partitioned CSR + score
-    from webgraph_ans_rs_spark.operators.hits import hits_halfstep_probe
+    # scatter join shuffle-hash over co-partitioned CSR + score. The frame
+    # is half-step 2 (the first hub gather) of a production hits call.
+    from webgraph_ans_rs_spark.operators.hits import hits
 
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        hs = hits_halfstep_probe(edges, vertices(docs))
-        hs_jplan = hs._jdf.queryExecution().executedPlan()
+        with superstep.capture() as cap:
+            hits(edges, vertices(docs), num_iter=2)
+        hs_jplan = cap.frame._jdf.queryExecution().executedPlan()
         hs_exchange = count_nodes(hs_jplan, "Exchange")
         hs_sort = count_nodes(hs_jplan, "Sort")
         hs_shj = count_nodes(hs_jplan, "ShuffledHashJoin")

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 def brandes_forward_probe(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """One forward sigma superstep WITHOUT the lineage-truncating
-    checkpoint, for plan auditing (the hits_halfstep_probe pattern): the
+    checkpoint, for plan auditing: the
     (seed, v) sigma aggregation must be map-side combinable (partial_sum
     before its exchange) and the whole step JVM-only."""
     d0 = seeds.select(

@@ -32,51 +32,39 @@ it inherits the flagship loop's discipline (operators/pagerank.py):
                    point up to scaling and the unrolled DuckDB oracle
                    replays it with plain SUM — no sqrt ulps.
 
-Loop-invariant state (both CSRs, zero rows) is cached once; lineage is
-truncated every ``truncate_every`` half-steps (localCheckpoint bounds
-plan depth without a per-half-step barrier). ``max_segment`` splits hub
-adjacency lists in BOTH directions (graph_build.build_csr_segments — the
-transpose is where real web graphs put their 1e7-degree hubs); segments
-gather independently and the partial sums fold in the same shuffle.
+Each half-step is one superstep of the superstep driver
+(operators/superstep.py), which owns the coalescing scope, the cached
+loop invariants (both CSRs, zero rows) and the localCheckpoint barriers
+(every ``_TRUNCATE_EVERY`` half-steps). The loop ends on the final
+authority half-step, which the driver always barriers, and the final hub
+half-step runs after it. ``max_segment`` splits hub adjacency lists in BOTH
+directions (graph_build.build_csr_segments — the transpose is where real
+web graphs put their 1e7-degree hubs); segments gather independently and
+the partial sums fold in the same shuffle.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .superstep import Loop, plan
+from .superstep import Loop
+
+# lineage truncation cadence, in half-steps (see pagerank._TRUNCATE_EVERY)
+_TRUNCATE_EVERY = 4
 
 
 def _csr(edges: DataFrame, p: int, max_segment: int | None) -> DataFrame:
-    from .pagerank import _pin_src_partitions
+    """(src, dsts) in HashPartitioning(src, p): ``groupBy("src")`` already
+    emits it (p is the session setting and coalescing is off in the loop);
+    the segmented build groups by (src, _seg), so it is re-exchanged."""
+    if max_segment is None:
+        return edges.groupBy("src").agg(F.collect_list("dst").alias("dsts"))
+    from .graph_build import build_csr_segments
 
-    if max_segment is not None:
-        from .graph_build import build_csr_segments
-
-        base = build_csr_segments(edges, max_segment)
-    else:
-        base = edges.groupBy("src").agg(F.collect_list("dst").alias("dsts"))
-    # groupBy("src") already emits HashPartitioning(src, P) — only re-
-    # exchange when the requested p differs or the build was segmented
-    # (grouped by (src, _seg)); see pagerank._pin_src_partitions
-    return _pin_src_partitions(
-        base.select("src", "dsts"), p, edges.sparkSession,
-        force=max_segment is not None,
-    )
-
-
-def _invariants(loop: Loop, edges: DataFrame, verts: DataFrame, p: int,
-                max_segment: int | None) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Cached forward CSR, transposed CSR and zero rows (uncounted)."""
-    e = edges.select("src", "dst")
-    csr_fwd = loop.keep(_csr(e, p, max_segment))
-    csr_fwd.count()
-    csr_rev = loop.keep(
-        _csr(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), p, max_segment)
-    )
-    csr_rev.count()
-    return csr_fwd, csr_rev, loop.keep(verts.select("vertex", F.lit(0.0).alias("c")))
+    return build_csr_segments(edges, max_segment).select("src", "dsts").repartition(p, "src")
 
 
 def _gather(csr: DataFrame, score: DataFrame, zeros: DataFrame) -> DataFrame:
@@ -88,7 +76,7 @@ def _gather(csr: DataFrame, score: DataFrame, zeros: DataFrame) -> DataFrame:
         .select(F.explode("dsts").alias("vertex"), F.col("sc").alias("c"))
         .unionAll(zeros)
         .groupBy("vertex")
-        .agg(F.sum("c").alias("raw"))
+        .agg(F.sum("c").alias("sc"))
     )
 
 
@@ -96,9 +84,7 @@ def hits(
     edges: DataFrame,
     verts: DataFrame,
     num_iter: int = 3,
-    shuffle_partitions: int | None = None,
     max_segment: int | None = None,
-    truncate_every: int = 4,
 ) -> DataFrame:
     """(vertex, auth, hub) after ``num_iter`` sum-normalized iterations.
 
@@ -107,78 +93,47 @@ def hits(
     including the edgeless-graph corner, where the normalization total of
     an all-zero frame is clamped to 1 so scores stay 0.0, never NaN.
 
-    Overflow guard: unnormalized magnitudes grow like (mean degree)^half-
-    steps, which overflows double for large ``num_iter`` on high-degree
-    graphs, so every ``truncate_every`` half-steps the checkpointed frame
-    is additionally RESCALED by its running max (uniform scaling commutes
-    through the linear gathers and cancels in the final division — the
-    scores are unchanged; the checkpoint is an action anyway, so the max
-    is one cheap driver agg on an already-materialized frame). Growth is
-    thus bounded by (max degree)^truncate_every between rescales.
+    Overflow guard: a half-step grows max |score| by at most a factor n
+    (degree ≤ n, scores start at 1), so after h half-steps it is at most
+    n^(h+1). Only when (2·num_iter + 1)·log10(n) > 250 (DBL_MAX is 1e308)
+    is every half-step barriered and its input divided by its max |score|;
+    uniform scaling commutes through the linear gathers and cancels in the
+    final division, so the scores are unchanged.
     """
     if num_iter < 1:
         raise ValueError(f"hits: num_iter must be >= 1, got {num_iter}")
     spark = edges.sparkSession
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # the superstep driver's scope: AQE partition coalescing off inside the
-    # loop, so the gather emits HashPartitioning(vertex, P) and the next
-    # half-step's join is exchange-free (the pagerank co-partitioning
-    # contract); the cached invariants are released on exit
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     with Loop(spark) as loop:
-        csr_fwd, csr_rev, zeros = _invariants(loop, edges, verts, p, max_segment)
-        n = zeros.count()
-        score = (
-            verts.select("vertex", F.lit(1.0).alias("sc"))
-            .repartition(p, "vertex")
-            .localCheckpoint(eager=True)
+        e = edges.select("src", "dst")
+        csr_fwd = loop.keep(_csr(e, p, max_segment))
+        csr_fwd.count()
+        csr_rev = loop.keep(
+            _csr(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), p, max_segment)
         )
-        # Conditional overflow guard (round-7): a half-step can grow the
-        # max magnitude by at most a factor n (degree ≤ n, scores start at
-        # 1), so max |score| after h half-steps ≤ n^(h+1). When
-        # (2·num_iter + 1)·log10(n) stays far inside double range the
-        # rescale agg + division are pure overhead and are SKIPPED —
-        # zero extra jobs, identical fixed point (uniform scaling cancels
-        # in the final normalization either way). DBL_MAX is 1e308; 250
-        # leaves two orders of magnitude of slack per half-step.
-        import math
+        csr_rev.count()
+        zeros = loop.keep(verts.select("vertex", F.lit(0.0).alias("c")))
+        n = zeros.count()
+        loop.start(
+            verts.select("vertex", F.lit(1.0).alias("sc")),
+            partition=lambda df: df.repartition(p, "vertex"),
+        )
+        rescale = (2 * num_iter + 1) * math.log10(max(n, 2)) > 250.0
 
-        need_rescale = (2 * num_iter + 1) * math.log10(max(n, 2)) > 250.0
+        def step(score: DataFrame, half: int) -> DataFrame:
+            if rescale:
+                m = score.agg(F.max(F.abs("sc"))).first()[0]
+                if m:  # all-zero frame (edgeless graph) — nothing to scale
+                    score = score.select("vertex", (F.col("sc") / F.lit(m)).alias("sc"))
+            return _gather(csr_fwd if half % 2 else csr_rev, score, zeros)
 
-        def _rescale(frame):
-            # running-max rescale at the (already materialized) barrier:
-            # keeps raw magnitudes ~O(1) so long loops never overflow;
-            # scaling commutes with the gathers and cancels at the end
-            if not need_rescale:
-                return frame
-            m = frame.agg(F.max(F.abs("sc"))).first()[0]
-            if not m:  # all-zero frame (edgeless graph) — nothing to scale
-                return frame
-            return frame.select("vertex", (F.col("sc") / F.lit(m)).alias("sc"))
-
-        auth_raw = None
-        half = 0
-        for i in range(num_iter):
-            last = i == num_iter - 1
-            auth_raw = _gather(csr_fwd, score, zeros).select(
-                "vertex", F.col("raw").alias("sc")
-            )
-            half += 1
-            if last:
-                # materialize the FINAL auth frame before the last hub
-                # gather consumes it: it is read three times (the gather,
-                # its total, the final join) — checkpointing it after the
-                # hub gather re-executed the whole half-step (one full
-                # E-sized gather wasted, measured ~0.8 s at 8.6M edges)
-                auth_raw = auth_raw.localCheckpoint(eager=True)
-            elif half % truncate_every == 0:
-                auth_raw = _rescale(auth_raw.localCheckpoint(eager=True))
-            score = _gather(csr_rev, auth_raw, zeros).select(
-                "vertex", F.col("raw").alias("sc")
-            )
-            half += 1
-            if half % truncate_every == 0 and not last:
-                score = _rescale(score.localCheckpoint(eager=True))
-        hub_raw = score.localCheckpoint(eager=True)
+        # the final authority frame is read three times (the last hub
+        # gather, its total, the final join): as the loop's last superstep
+        # it is barriered before any of them runs
+        auth_raw = loop.run(
+            step, 2 * num_iter - 1, truncate_every=None if rescale else _TRUNCATE_EVERY
+        ).state
+        hub_raw = loop.barrier(step(auth_raw, 2 * num_iter))
         atot = auth_raw.agg(F.sum("sc")).first()[0] or 1.0  # 0/None → 1
         htot = hub_raw.agg(F.sum("sc")).first()[0] or 1.0
         return (
@@ -189,28 +144,3 @@ def hits(
             )
             .select("vertex", "auth", "hub")
         )
-
-
-def hits_halfstep_probe(
-    edges: DataFrame,
-    verts: DataFrame,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Un-executed second half-step frame on the production shapes (first
-    half-step executed + checkpointed exactly as the loop does) — for
-    tools/plan_audit.py check 20: a HITS half-step must plan exactly ONE
-    exchange, like the PageRank superstep. Built and planned inside the
-    same coalescing scope as ``hits``, while the invariants are cached."""
-    spark = edges.sparkSession
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with Loop(spark) as loop:
-        csr_fwd, csr_rev, zeros = _invariants(loop, edges, verts, p, None)
-        zeros.count()
-        score = (
-            verts.select("vertex", F.lit(1.0).alias("sc"))
-            .repartition(p, "vertex")
-            .localCheckpoint(eager=True)
-        )
-        araw = _gather(csr_fwd, score, zeros).localCheckpoint(eager=True)
-        auth = araw.select("vertex", (F.col("raw") / F.lit(2.0)).alias("sc"))
-        return plan(_gather(csr_rev, auth, zeros))

@@ -21,6 +21,8 @@ the iteration policy around them, written once:
   step function's output before its barrier — planned inside that loop's
   scope while its invariants are cached: plan audits (tools/plan_audit.py)
   inspect the frame the production loop builds, not a re-creation of it.
+  While it is active the loop barriers every superstep, so the frame holds
+  exactly one superstep whatever the kernel's cadence.
 """
 
 from __future__ import annotations
@@ -52,6 +54,23 @@ def _edge_signature(df: DataFrame) -> tuple[int, object]:
     return row.n, row.sig
 
 
+def signature_delta():
+    """A ``delta`` for loops whose state is an edge set: 0.0 when the new
+    state's (count, hash) signature equals the previous state's, else 1.0.
+    The last signature is remembered, so each call computes one (the first
+    call also signs its ``old``)."""
+    last = None
+
+    def delta(new: DataFrame, old: DataFrame) -> float:
+        nonlocal last
+        if last is None:
+            last = _edge_signature(old)
+        prev, last = last, _edge_signature(new)
+        return float(last != prev)
+
+    return delta
+
+
 def plan(df: DataFrame) -> DataFrame:
     """Fix ``df``'s physical plan now (QueryExecution keeps it): cache
     substitution and partitioning are resolved against the current session
@@ -64,8 +83,8 @@ def plan(df: DataFrame) -> DataFrame:
 def capture():
     """Yields a box whose ``.frame`` becomes the frame of superstep 2 of the
     next ``Loop.run`` (before its barrier), planned in the loop's scope.
-    Run the kernel in a mode that barriers every superstep (``tol`` set, or
-    a loop without ``truncate_every``) so the frame holds one superstep."""
+    Loops barrier every superstep meanwhile, so the frame holds one
+    superstep over a barriered input."""
     global _capture
     box = SimpleNamespace(frame=None)
     prev, _capture = _capture, box
@@ -169,7 +188,7 @@ class Loop:
         only every k-th superstep — skipped when one step or fewer remains,
         since the caller's action materializes the last one — plus the last
         superstep, and every superstep whose delta is measured or whose
-        snapshot is committed."""
+        snapshot is committed, or while ``capture()`` is active."""
         t_loop = time.time()
         history: list[dict] = []
         d = float("inf")
@@ -182,6 +201,7 @@ class Loop:
                 _capture.frame = plan(new)
             if (
                 truncate_every is None
+                or _capture is not None
                 or delta is not None
                 or self.cm is not None
                 or it == max_iter
